@@ -129,14 +129,7 @@ object KeyedMerge {
       // and the commit metadata scales with buckets, not tasks×buckets.
       .repartition(math.min(touched.length, 4096), col(BucketCol))
 
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try winners.write.mode("overwrite").partitionBy(BucketCol).parquet(dir)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    overwriteBuckets(s, winners, dir)
   }
 
   /** One-pass MERGE + CHANGE-DATA-FEED (VERDICT r13 #2): apply a change
@@ -226,17 +219,18 @@ object KeyedMerge {
         prefixed.map(c => when(col("__new_wins"), col(s"__new_$c"))
           .otherwise(col(s"__old_$c")).as(c)): _*)
         .repartition(math.min(touched.length, 4096), col(BucketCol))
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try winners.write.mode("overwrite").partitionBy(BucketCol).parquet(dir)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      overwriteBuckets(s, winners, dir)
     } finally jc.unpersist()
     ()
   }
+
+  /** Rewrites only the bucket partitions `winners` touches (dynamic
+    * partition overwrite); every other bucket stays as committed. */
+  private def overwriteBuckets(s: SparkSession, winners: DataFrame,
+      dir: String): Unit =
+    StreamingQueries.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      winners.write.mode("overwrite").partitionBy(BucketCol).parquet(dir)
+    }
 
   /** The merged live table: tombstones and internal columns dropped. */
   def read(s: SparkSession, dir: String): DataFrame =

@@ -66,15 +66,11 @@ object NearDup {
     * At 100 TB this table is exactly what [[graft.sources.Bucketing]]
     * materializes as a bucketed layout; the in-session persist is the
     * local[n] stand-in for that. */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val sigCache = new SessionMemo[DataFrame]
 
-  private[analytics] def corpusSignatures(s: SparkSession, d: String): DataFrame = {
-    sigCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    sigCache.getOrElseUpdate((s, d),
-      signatures(documents(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  private[analytics] def corpusSignatures(s: SparkSession, d: String): DataFrame =
+    sigCache(s, d)(signatures(documents(s, d))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Candidate pairs from banded buckets: explode 32 (band, bandHash) keys
     * per doc, self-join per bucket, dedupe pairs. */

@@ -53,19 +53,19 @@ private[graft] object StageCache {
   // paid one job per call (caught by PlanSpec's n1 no-eager-jobs gate
   // when n1 moved onto the cache, r14). DataFrames are immutable and
   // lazy — handing every caller the same frame is safe, and lets
-  // repeated constructions add zero jobs. Keyed by session so a
-  // restarted session re-reads (old entries are dropped lazily).
-  private val readFrames =
-    new ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // repeated constructions add zero jobs.
+  private val readFrames = new SessionMemo[DataFrame]
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => deleteAll()))
 
-  /** The staged parquet of `build`, materializing on first call. */
+  /** The staged parquet of `build`, materializing on first call. The
+    * build runs outside the read-frame memo: a build may itself read
+    * another stage (n4's clusters fold n1's pairs), and the memo's
+    * compute must not re-enter it. */
   def getOrBuild(spark: SparkSession, key: String)(build: => DataFrame)
       : DataFrame = {
-    readFrames.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    readFrames.computeIfAbsent((spark, key), _ =>
-      spark.read.parquet(s"${getOrBuildDir(key) { dir => build.write.parquet(s"$dir/t"); () }}/t"))
+    val dir = getOrBuildDir(key) { dir => build.write.parquet(s"$dir/t"); () }
+    readFrames(spark, key)(spark.read.parquet(s"$dir/t"))
   }
 
   /** Multi-output variant: `build` populates the returned directory

@@ -1,13 +1,15 @@
 package graft.analytics
 
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.core._
 import graft.engine.GraftProcessor
-import graft.processor.RecordProcessor
-import graft.sources.{EventStream, SourceClient}
+import graft.monitoring.EventSink
+import graft.processor.{Processed, RecordProcessor}
+import graft.sources.SourceClient
 
 /** The minimum end-to-end slice as a registered, oracle-checked query
   * (SURVEY §7 step 4): events.parquet → 8-shard KRecord stream → custom
@@ -64,15 +66,109 @@ object StreamingQueries {
       sfDir: String, table: String = "events", mbPerPartition: Int = 16)(
       f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     def bytes(p: java.io.File): Long =
       if (p.isDirectory) p.listFiles().map(bytes).sum else p.length()
-    val sized = statePartitionsFor(prev.toLong,
+    val sized = statePartitionsFor(spark.conf.get(key).toLong,
       bytes(new java.io.File(s"$sfDir/$table.parquet")), mbPerPartition)
-    spark.conf.set(key, sized.toString)
-    try f
-    finally spark.conf.set(key, prev)
+    withConf(spark, key -> sized.toString)(f)
   }
+
+  /** Sets one session conf for the duration of `f`, then restores it: a
+    * key that held a value gets it back, a key that was unset is unset
+    * again — also when `f` throws. The one place this codebase changes a
+    * session conf. */
+  private[graft] def withConf[T](spark: SparkSession, kv: (String, String))(
+      f: => T): T = {
+    val (key, value) = kv
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The RocksDB state-store provider — s13/s14's `transformWithState`
+    * operators need it; the session default (HDFS-backed) stays for the
+    * rest. */
+  private[graft] val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The one `Trigger.AvailableNow` drain: starts the query and blocks
+    * until it has consumed everything visible at start. */
+  private def drain[T](w: DataStreamWriter[T]): Unit =
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Drains `df` into a uniquely named memory sink and returns the sink
+    * table. Only for outputs bounded by state size, never corpus-sized:
+    * a memory sink collects every row into one JVM's heap. */
+  private def drainToMemory(df: DataFrame, outputMode: String,
+      tag: String): DataFrame = {
+    val name = s"graft_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    drain(df.writeStream.format("memory").queryName(name).outputMode(outputMode))
+    df.sparkSession.table(name)
+  }
+
+  /** Drains `df` through the transactional parquet file sink under `base`
+    * (`out` + `ckpt`) and re-reads the committed output; the re-read
+    * respects `_spark_metadata`, so only committed files count. Draining
+    * the same `base` again is an operator restart on that checkpoint. */
+  private def drainToFiles(df: DataFrame, base: String): DataFrame = {
+    drain(fileSink(df, base).outputMode("append"))
+    df.sparkSession.read.parquet(s"$base/out")
+  }
+
+  private def fileSink(df: DataFrame, base: String) =
+    df.writeStream.format("parquet")
+      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
+
+  /** Drains a complete-mode aggregate executor-parallel: every epoch
+    * overwrites one scratch directory with the full result, so the last
+    * epoch's write IS the complete output, independent of micro-batch
+    * placement — and the executors write a corpus-scaled result in
+    * parallel instead of collecting it. */
+  private def drainComplete(df: DataFrame, tag: String): DataFrame = {
+    val outDir = s"${tempDir(s"graft_${tag}_")}/out"
+    drain(df.writeStream
+      .foreachBatch((b: DataFrame, _: Long) => b.write.mode("overwrite").parquet(outDir))
+      .outputMode("complete"))
+    df.sparkSession.read.parquet(outDir)
+  }
+
+  /** A [[GraftProcessor]] over the events stream whose committed items
+    * append to `itemsDir` as parquet with columns `cols`. */
+  private def engine[T](processor: RecordProcessor[T], client: SourceClient,
+      batch: Int, itemsDir: String, cols: Seq[String],
+      store: CheckpointStore = new InMemoryCheckpointStore,
+      sink: EventSink = EventSink.Noop)(
+      implicit itemEnc: Encoder[T], processedEnc: Encoder[Processed[T]])
+      : GraftProcessor[T] =
+    new GraftProcessor[T](ProcessorConfig("events", batchSize = batch),
+      processor, client, store, sink,
+      onItems = (ds, _) => ds.toDF(cols: _*).write.mode("append").parquet(itemsDir))
+
+  /** Drains the stream through `gp` to completion (the engine's own
+    * AvailableNow run), rethrowing the engine's error. */
+  private def runEngine(spark: SparkSession, ckpt: String,
+      gp: GraftProcessor[_]): Unit =
+    gp.run(spark, ckpt).fold(e => throw e, identity)
+
+  /** Per-type event counts of landed items — the s1 oracle's shape. */
+  private def countByType(items: DataFrame): DataFrame =
+    items.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"))
+      .orderBy(col("event_type"))
+
+  /** The CDC change projection of event rows (f8's shape): keyed by
+    * user, sequenced by (tsu, event_id); `error` events are deletes. */
+  private def changeRows(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"),
+      expr("ts div 1000").as("tsu"), col("event_id"),
+      when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
+        .as(KeyedMerge.OpCol),
+      col("event_type").as("last_type"), col("value").as("last_value"))
 
   /** Flush-token side stream: writes the tiny `rows` batch to scratch
     * parquet and re-reads it as a file stream, so a handful of +200-year
@@ -101,11 +197,8 @@ object StreamingQueries {
     * parquet footer-read job just to hand `readStream` its (constant per
     * dataset) schema — ~25 streaming entries × 2 runs × ~30-60 ms per
     * bench sweep of pure re-inference (r15; the StageCache.readFrames
-    * lesson applied to streaming sources). Keyed by session so a
-    * restarted session re-reads; stale-session entries are dropped
-    * lazily like StageCache's. */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]()
+    * lesson applied to streaming sources). */
+  private val schemaMemo = new SessionMemo[org.apache.spark.sql.types.StructType]
 
   /** File-stream source for any driver table, handling both physical
     * layouts (single file vs Spark-written part-file directory — see
@@ -115,13 +208,10 @@ object StreamingQueries {
     * per-batch fold assumes event-time order within the batch (s12). */
   private def tableFileStream(spark: SparkSession, sfDir: String,
       table: String, singleBatch: Boolean = false): DataFrame = {
-    schemaMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val schema = schemaMemo.computeIfAbsent((spark, s"$sfDir/$table.parquet"),
-      k => spark.read.parquet(k._2).schema)
-    val asDir = new java.io.File(s"$sfDir/$table.parquet").isDirectory
-    var reader = spark.readStream.schema(schema)
+    val path = s"$sfDir/$table.parquet"
+    var reader = spark.readStream.schema(schemaMemo(spark, path)(spark.read.parquet(path).schema))
     if (singleBatch) reader = reader.option("maxFilesPerTrigger", "1000000")
-    if (asDir) reader.parquet(s"$sfDir/$table.parquet")
+    if (new java.io.File(path).isDirectory) reader.parquet(path)
     else reader.option("pathGlobFilter", s"$table.parquet").parquet(sfDir)
   }
 
@@ -165,21 +255,9 @@ object StreamingQueries {
     // Without volume-scaled sizing (see sizedClient) the fixed 8×500
     // layout made s1 super-linear in the sf1/sf10 rehearsals.
     val (client, batch) = sizedClient(spark, sfDir)
-    val gp = new GraftProcessor[String](
-      ProcessorConfig("events", batchSize = batch),
-      new EventTypeProcessor,
-      client,
-      new InMemoryCheckpointStore,
-      onItems = (ds, _) => ds.toDF("event_type").write.mode("append").parquet(itemsDir)
-    )
-    gp.run(spark, s"$tmp/ckpt") match {
-      case Left(e) => throw e
-      case Right(()) =>
-        spark.read.parquet(itemsDir)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"))
-          .orderBy(col("event_type"))
-    }
+    runEngine(spark, s"$tmp/ckpt",
+      engine(new EventTypeProcessor, client, batch, itemsDir, Seq("event_type")))
+    countByType(spark.read.parquet(itemsDir))
   }
 
   val streamCountOracle: String =
@@ -272,24 +350,14 @@ object StreamingQueries {
     val tmp = tempDir("graft-stream-q3")
     val itemsDir = s"$tmp/items"
     val (client, batch) = sizedClient(spark, sfDir)
-    val gp = new GraftProcessor[(String, Double)](
-      ProcessorConfig("events", batchSize = batch),
-      new PoisonFilterProcessor,
-      client,
-      new InMemoryCheckpointStore,
-      onItems = (ds, _) => ds.toDF("event_type", "value")
-        .write.mode("append").parquet(itemsDir)
-    )
-    gp.run(spark, s"$tmp/ckpt") match {
-      case Left(e) => throw e
-      case Right(()) =>
-        spark.read.parquet(itemsDir)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            min(col("value")).as("min_value"),
-            max(col("value")).as("max_value"))
-          .orderBy(col("event_type"))
-    }
+    runEngine(spark, s"$tmp/ckpt", engine(new PoisonFilterProcessor, client, batch,
+      itemsDir, Seq("event_type", "value")))
+    spark.read.parquet(itemsDir)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        min(col("value")).as("min_value"),
+        max(col("value")).as("max_value"))
+      .orderBy(col("event_type"))
   }
 
   val streamDeadLetterOracle: String =
@@ -313,25 +381,12 @@ object StreamingQueries {
     val itemsDir = s"$tmp/items"
     val (client, batch) = sizedClient(spark, sfDir)
     val store = new InMemoryCheckpointStore
-    def runOnce(tag: String): Unit = {
-      val gp = new GraftProcessor[String](
-        ProcessorConfig("events", batchSize = batch),
-        new EventTypeProcessor,
-        client,
-        store,
-        onItems = (ds, _) => ds.toDF("event_type").write.mode("append").parquet(itemsDir)
-      )
-      gp.run(spark, s"$tmp/ckpt-$tag") match {
-        case Left(e) => throw e
-        case Right(()) => ()
-      }
-    }
+    def runOnce(tag: String): Unit =
+      runEngine(spark, s"$tmp/ckpt-$tag", engine(new EventTypeProcessor, client,
+        batch, itemsDir, Seq("event_type"), store))
     runOnce("first")
     runOnce("resume") // must contribute nothing
-    spark.read.parquet(itemsDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("event_type"))
+    countByType(spark.read.parquet(itemsDir))
   }
 
   /** Soft-fails EVERY record on its first attempt (attemptNumber 0), then
@@ -361,21 +416,9 @@ object StreamingQueries {
     val tmp = tempDir("graft-stream-q5")
     val itemsDir = s"$tmp/items"
     val (client, batch) = sizedClient(spark, sfDir)
-    val gp = new GraftProcessor[String](
-      ProcessorConfig("events", batchSize = batch),
-      new FirstAttemptFlakes,
-      client,
-      new InMemoryCheckpointStore,
-      onItems = (ds, _) => ds.toDF("event_type").write.mode("append").parquet(itemsDir)
-    )
-    gp.run(spark, s"$tmp/ckpt") match {
-      case Left(e) => throw e
-      case Right(()) =>
-        spark.read.parquet(itemsDir)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"))
-          .orderBy(col("event_type"))
-    }
+    runEngine(spark, s"$tmp/ckpt",
+      engine(new FirstAttemptFlakes, client, batch, itemsDir, Seq("event_type")))
+    countByType(spark.read.parquet(itemsDir))
   }
 
   /** s6 — Structured Streaming EVENT-TIME WINDOW aggregation under the
@@ -395,16 +438,10 @@ object StreamingQueries {
     * the memory sink is the test harness, a real run writes to a table. */
   def streamWindowCounts(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
-    val name = s"graft_s6_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    drainToMemory(Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .select(timestamp_micros(expr("ts div 1000")).as("tsx"), col("event_type"))
       .groupBy(window(col("tsx"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+      .agg(count(lit(1)).as("n_events")), "complete", "s6")
       .select(unix_millis(col("window.start")).as("day_start"),
         col("event_type"), col("n_events"))
       .orderBy(col("day_start"), col("event_type"))
@@ -434,11 +471,9 @@ object StreamingQueries {
     * stops arriving. */
   def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
     // parquet sink, not a memory sink: the joined pair set is corpus-sized
     // and a memory sink materializes it on the driver (the s12 sf30
     // maxResultSize lesson — s7 learned it first)
-    val base = tempDir("graft_s8_")
     def src = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .select(col("event_id"), col("user_id"),
         timestamp_micros(expr("ts div 1000")).as("tsx"), col("event_type"))
@@ -450,17 +485,14 @@ object StreamingQueries {
       .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
         col("tsx").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
-    val q = purchases.join(clicks,
+    drainToFiles(purchases.join(clicks,
         col("c_user") === col("p_user") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
       .select(col("p_id"), col("p_user").as("user_id"), col("click_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out").orderBy(col("p_id"), col("click_id"))
+        (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us")),
+      tempDir("graft_s8_"))
+      .orderBy(col("p_id"), col("click_id"))
   }
 
   /** s9 — STREAMING SESSIONIZATION under the oracle gate: `session_window`
@@ -477,23 +509,14 @@ object StreamingQueries {
     * the state store; merges happen store-side per micro-batch. */
   def streamSessions(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
     val gapMs = 6L * 3600 * 1000
     // complete-mode output is the FULL session set (corpus-scaled) — land
     // it executor-parallel via foreachBatch overwrite instead of a driver
-    // memory sink (the s7 r9 lesson); the last epoch's overwrite IS the
-    // complete result, independent of micro-batch placement.
-    val outDir = s"${tempDir("graft_s9_")}/out"
-    val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    // memory sink (the s7 r9 lesson).
+    drainComplete(Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .select(col("user_id"), timestamp_micros(expr("ts div 1000")).as("tsx"))
       .groupBy(session_window(col("tsx"), "6 hours"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(outDir))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+      .agg(count(lit(1)).as("n_events")), "s9")
       .select(col("user_id"), col("n_events"),
         (unix_millis(col("session_window.end")) -
           unix_millis(col("session_window.start")) - gapMs).as("span_ms"))
@@ -520,25 +543,14 @@ object StreamingQueries {
     * after the drain so the oracle comparison is placement-independent. */
   def streamDedup(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
     // parquet sink, not a memory sink: the deduped stream is corpus-sized
     // (every surviving event), and a memory sink materializes it on the
     // DRIVER — measured 27 s of the 10 M-row sf10 drain (SCALE.md r9).
-    // The executor-parallel file sink is also the honest 100 TB shape;
-    // the re-read respects `_spark_metadata` (s10's contract).
-    val base = tempDir("graft_s7_")
-    val q = eventsFileStream(spark, sfDir)
+    // The executor-parallel file sink is also the honest 100 TB shape.
+    countByType(drainToFiles(eventsFileStream(spark, sfDir)
       .withColumn("copy", explode(array(lit(1), lit(2))))
       .select(col("event_id"), col("event_type"))
-      .dropDuplicates("event_id")
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("event_type"))
+      .dropDuplicates("event_id"), tempDir("graft_s7_")))
   }
 
   /** s10 — EXACTLY-ONCE FILE SINK under the oracle gate: the production
@@ -556,23 +568,10 @@ object StreamingQueries {
     * commit lock); re-reads prune to committed files via the metadata
     * log. State: none beyond source offsets in the checkpoint. */
   def streamFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s10_")
-    val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    def runOnce(): Unit = {
-      val q = eventsFileStream(spark, sfDir)
-        .select(col("event_id"), col("event_type"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    runOnce()
-    runOnce() // restart with the same checkpoint: must commit nothing new
-    spark.read.parquet(out) // respects _spark_metadata: committed files only
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("event_type"))
+    def stream = eventsFileStream(spark, sfDir).select(col("event_id"), col("event_type"))
+    drain(fileSink(stream, base))
+    countByType(drainToFiles(stream, base)) // restart on the same checkpoint: commits nothing new
   }
 
   /** s11 — STREAMING NEAR-DUP under the oracle gate: documents stream in
@@ -592,8 +591,6 @@ object StreamingQueries {
     * spec-gated in StreamingNearDupSpec). */
   def streamNearDup(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir, table = "documents", mbPerPartition = 4) {
-    import org.apache.spark.sql.streaming.Trigger
-    val name = s"graft_s11_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val nBench = 64L
     val stream = tableFileStream(spark, sfDir, "documents")
       .filter(col("doc_id") >= nBench)
@@ -602,11 +599,8 @@ object StreamingQueries {
     val corpus = Tables.documents(spark, sfDir)
       .filter(col("doc_id") < nBench)
       .select(col("doc_id"), col("text"))
-    val q = NearDup.streamingNearDup(stream, corpus, tsCol = "arrival_ts")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(NearDup.streamingNearDup(stream, corpus, tsCol = "arrival_ts"),
+        "append", "s11")
       .select(col("doc_id"), col("match_id").as("bench_id"), col("jaccard"))
       .orderBy(col("doc_id"), col("bench_id"))
   }
@@ -635,7 +629,6 @@ object StreamingQueries {
     *     milliseconds the two coincide exactly. */
   def streamStatefulSessions(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir, mbPerPartition = 4) {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Sessionize
     import spark.implicits._
     val gapMs = 6L * 3600 * 1000
@@ -644,7 +637,6 @@ object StreamingQueries {
     // parquet sink, not a memory sink: the closed-session set is
     // corpus-sized — the memory sink materialized it on the driver and
     // breached spark.driver.maxResultSize at sf30 (r11 decade check)
-    val base = tempDir("graft_s12_")
     val real = Tables.normalizeEventTs(
         tableFileStream(spark, sfDir, "events", singleBatch = true))
       .select(col("user_id").as("userId"), col("event_type").as("eventType"),
@@ -660,13 +652,8 @@ object StreamingQueries {
         timestamp_millis(lit(maxMs + shiftMs)).as("ts"))
     val events = real.unionByName(tokenStream(spark, tokens))
       .as[Sessionize.UserEvent]
-    val q = Sessionize.closedSessions(events, gapMs = gapMs - 1)
-      .toDF()
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out")
+    drainToFiles(Sessionize.closedSessions(events, gapMs = gapMs - 1).toDF(),
+        tempDir("graft_s12_"))
       .filter(col("sessionStartMs") < realBefore) // drop the flush copies
       .groupBy(col("userId"))
       .agg(count(lit(1)).as("n_sessions"),
@@ -686,29 +673,16 @@ object StreamingQueries {
     * updated total), so the oracle needs no single-batch pin. */
   def streamRunningCounts(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Sessionize
     import spark.implicits._
-    val name = s"graft_s13_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val emitted = withConf(spark, RocksDbStateStore) {
       val events = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
         .select(col("user_id").as("userId"), col("event_type").as("eventType"),
           timestamp_micros(expr("ts div 1000")).as("ts"))
         .as[Sessionize.UserEvent]
-      val q = Sessionize.runningCounts(events)
-        .toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      drainToMemory(Sessionize.runningCounts(events).toDF(), "update", "s13")
     }
-    spark.table(name)
+    emitted
       .groupBy(col("userId"))
       .agg(max(col("nEvents")).as("n_events")) // last emission = running max
       .select(col("userId").as("user_id"), col("n_events"))
@@ -729,31 +703,18 @@ object StreamingQueries {
   def streamTopK(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir, mbPerPartition = 4) {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.{HeavyHitters, Sessionize}
     import spark.implicits._
-    val name = s"graft_s14_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val emitted = withConf(spark, RocksDbStateStore) {
       val events = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
         .select(col("user_id").as("userId"), col("event_type").as("eventType"),
           timestamp_micros(expr("ts div 1000")).as("ts"))
         .as[Sessionize.UserEvent]
-      val q = HeavyHitters.typeUserCounts(events)
-        .toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      drainToMemory(HeavyHitters.typeUserCounts(events).toDF(), "update", "s14")
     }
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("n").desc, col("user_id"))
-    spark.table(name)
+    emitted
       .groupBy(col("eventType"), col("userId"))
       .agg(max(col("n")).as("n")) // monotone → last emission
       .select(col("eventType").as("event_type"), col("userId").as("user_id"),
@@ -796,10 +757,6 @@ object StreamingQueries {
     * always-on deployment holds O(window) state per user, never O(stream). */
   def streamLeftOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
-    // parquet sink, not a memory sink: the outer-joined pair set is
-    // corpus-sized (the s12 sf30 maxResultSize lesson)
-    val base = tempDir("graft_s15_")
     val shiftUs = FlushShiftMs * 1000L
     val realBeforeUs = RealBeforeMs * 1000L
     // ONE +200y token per SIDE (not the r8 copy-of-every-event explode,
@@ -832,19 +789,16 @@ object StreamingQueries {
       .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
         col("tsx").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
-    val q = purchases.join(clicks,
+    // parquet sink, not a memory sink: the outer-joined pair set is
+    // corpus-sized (the s12 sf30 maxResultSize lesson)
+    drainToFiles(purchases.join(clicks,
         col("c_user") === col("p_user") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"),
         "leftOuter")
       .select(col("p_id"), col("p_user").as("user_id"), col("click_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"),
-        unix_micros(col("p_ts")).as("p_us"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out")
+        unix_micros(col("p_ts")).as("p_us")), tempDir("graft_s15_"))
       .filter(col("p_us") < realBeforeUs) // drop the flush copies
       .select(col("p_id"), col("user_id"), col("click_id"), col("gap_us"))
       .orderBy(col("p_id"), col("click_id"))
@@ -875,7 +829,6 @@ object StreamingQueries {
     * one record lost from a late shard, or one replayed across the
     * reveal, breaks the hash. */
   def streamReshard(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val tmp = tempDir("graft-stream-q16")
     val itemsDir = s"$tmp/items"
@@ -889,22 +842,14 @@ object StreamingQueries {
     // reveal at 3 lost the race against processAllAvailable there)
     val revealing = new graft.sources.RevealingClient(client,
       visibleInitially = math.max(1, all / 2), revealAfterListCalls = 2)
-    val gp = new GraftProcessor[String](
-      ProcessorConfig("events", batchSize = batch),
-      new EventTypeProcessor,
-      revealing,
-      new InMemoryCheckpointStore,
-      onItems = (ds, _) => ds.toDF("event_type").write.mode("append").parquet(itemsDir))
+    val gp = engine(new EventTypeProcessor, revealing, batch, itemsDir, Seq("event_type"))
     val q = gp.start(spark, s"$tmp/ckpt", Trigger.ProcessingTime(0))
     try {
       q.processAllAvailable()
       q.stop()
       q.awaitTermination()
     } finally gp.cleanup()
-    spark.read.parquet(itemsDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("event_type"))
+    countByType(spark.read.parquet(itemsDir))
   }
 
   /** s17 — STREAMING ANN-INDEX INGEST: the index-maintenance side of the
@@ -926,7 +871,6 @@ object StreamingQueries {
     * e4/e9 index family: codebook broadcast, partial aggregation per
     * micro-batch, complete-mode overwrite of a 16-row summary. */
   def streamAnnIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.GraftFunctions.register(spark)
     val nCells = 16
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -939,8 +883,7 @@ object StreamingQueries {
       // per micro-batch; this one is row-group-pruned and cheap, but the
       // codebook of a streaming ANN index must not drift mid-stream
       .localCheckpoint()
-    val outDir = s"${tempDir("graft_s17_")}/out"
-    val q = tableFileStream(spark, sfDir, "embeddings")
+    drainComplete(tableFileStream(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .crossJoin(broadcast(codebook))
       .select(col("vec_id"), expr(
@@ -948,13 +891,7 @@ object StreamingQueries {
           |  struct(graft_cosine(v, c.cv) AS s, -c.cell_id AS n))).n) * -1L"""
           .stripMargin).as("cell_id"))
       .groupBy(col("cell_id"))
-      .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("id_checksum"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(outDir))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+      .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("id_checksum")), "s17")
       .select(col("cell_id"), col("n_vectors"), col("id_checksum"))
       .orderBy(col("cell_id"))
   }
@@ -996,7 +933,6 @@ object StreamingQueries {
     * corpus size; scoring is one codegen'd hash pass + a per-row HOF
     * fold; the sink is executor-parallel parquet append. */
   def streamDsirScore(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.GraftFunctions.register(spark)
     // r14: the λ table comes from the shared trained-artifact stage
     // (TextAnalytics.stagedDsirLambda — t17 consumes the same table), so
@@ -1013,7 +949,7 @@ object StreamingQueries {
       // RDD scan of one row — the "frozen λ map" the contract promises.
       .localCheckpoint()
     val outDir = s"${tempDir("graft_s18_")}/out"
-    val q = tableFileStream(spark, sfDir, "documents")
+    drain(tableFileStream(spark, sfDir, "documents")
       .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
       .crossJoin(broadcast(lam))
@@ -1028,8 +964,7 @@ object StreamingQueries {
       .writeStream
       .foreachBatch((df: DataFrame, _: Long) =>
         df.write.mode("append").parquet(outDir))
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .outputMode("append"))
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_feats"), col("importance"),
         col("mean_lambda"))
@@ -1053,21 +988,14 @@ object StreamingQueries {
     * of it, one bucket equi-join, scalar totals broadcast). The corpus
     * text never shuffles — only (source, bucket) pairs do. */
   def streamDriftAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.GraftFunctions.register(spark)
-    val outDir = s"${tempDir("graft_s21_")}/out"
-    val q = tableFileStream(spark, sfDir, "documents")
+    val counts = drainComplete(tableFileStream(spark, sfDir, "documents")
       .select(col("source"), explode(expr(
         """transform(graft_md5_prefix_hashes(split(lower(text), ' ')),
           |  t -> t % 1024)""".stripMargin)).as("bucket"))
       .groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("cs"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(outDir))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    Views.sql(spark, spark.read.parquet(outDir), "graft_s21_sb_v",
+      .agg(count(lit(1)).as("cs")), "s21")
+    Views.sql(spark, counts, "graft_s21_sb_v",
       s"""WITH c AS (SELECT bucket, sum(cs) AS c FROM graft_s21_sb_v
         |  GROUP BY bucket),
         |tots AS (SELECT sum(cs) AS t_total FROM graft_s21_sb_v),
@@ -1170,7 +1098,7 @@ object StreamingQueries {
     * (1.4M events dropped). */
   def s19MonitoringMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.monitoring.{EventSink, MetricsAggregator}
+    import graft.monitoring.MetricsAggregator
     val tmp = tempDir("graft-s19-")
     val (client, batch) = sizedClient(spark, sfDir)
     // the bound is a counter, not a preallocation — memory is used only
@@ -1221,20 +1149,9 @@ object StreamingQueries {
     val consumers = Seq(consumerThread(0), consumerThread(1))
     consumers.foreach(_.start())
     val tEngine0 = System.nanoTime()
-    val gp = new GraftProcessor[String](
-      ProcessorConfig("events", batchSize = batch),
-      new MonitoredDecodeProcessor,
-      client,
-      new InMemoryCheckpointStore,
-      sink = bounded,
-      onItems = (ds, _) =>
-        ds.toDF("event_type").write.mode("append").parquet(s"$tmp/items"))
-    try {
-      gp.run(spark, s"$tmp/ckpt") match {
-        case Left(e) => throw e
-        case Right(()) => ()
-      }
-    } finally {
+    try runEngine(spark, s"$tmp/ckpt", engine(new MonitoredDecodeProcessor, client,
+      batch, s"$tmp/items", Seq("event_type"), sink = bounded))
+    finally {
       engineDone = true
       consumers.foreach(_.join())
     }
@@ -1305,28 +1222,19 @@ object StreamingQueries {
     * partitioned dynamic overwrite); nothing corpus-sized shuffles;
     * bucket count self-scales from the corpus row count. */
   def s20StreamKeyedMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s20_")
     val dir = s"$base/table"; val ckpt = s"$base/ckpt"
     val numBuckets = math.max(8L,
       math.min(4096L, Tables.events(spark, sfDir).count() / 50000L)).toInt
-    def runOnce(): Unit = {
-      val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    def runOnce(): Unit =
+      drain(Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
         .writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
-          val ch = b.select(col("user_id"),
-            expr("ts div 1000").as("tsu"), col("event_id"),
-            when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
-              .as(KeyedMerge.OpCol),
-            col("event_type").as("last_type"), col("value").as("last_value"))
-          KeyedMerge.applyChanges(spark, dir, ch,
+          KeyedMerge.applyChanges(spark, dir, changeRows(b),
             keyCols = Seq("user_id"), seqCols = Seq("tsu", "event_id"),
             numBuckets = numBuckets)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+        .option("checkpointLocation", ckpt))
     runOnce()
     runOnce() // restart on the same checkpoint: zero batches re-applied
     KeyedMerge.read(spark, dir)
@@ -1366,23 +1274,14 @@ object StreamingQueries {
     * suites and leftover dirs from earlier sessions). */
   def s22StreamVersionedIngestAt(spark: SparkSession, sfDir: String,
       base: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val dir = s"$base/table"; val ckpt = s"$base/ckpt"
-    def runOnce(): Unit = {
-      val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    def runOnce(): Unit =
+      drain(Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
         .writeStream
         .foreachBatch { (b: DataFrame, batchId: Long) =>
-          val ch = b.select(col("user_id"),
-            expr("ts div 1000").as("tsu"), col("event_id"),
-            when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
-              .as(VersionedTable.OpCol),
-            col("event_type").as("last_type"), col("value").as("last_value"))
-          VersionedTable.commitDelta(dir, ch, batchId)
+          VersionedTable.commitDelta(dir, changeRows(b), batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+        .option("checkpointLocation", ckpt))
     runOnce()
     runOnce() // restart on the same checkpoint: zero deltas re-committed
     VersionedTable
@@ -1410,25 +1309,17 @@ object StreamingQueries {
     * BOUNDED file set — the read-amplification counter-move measured at
     * 200 deltas in SinkSoakSpec, here gated under live interleaving. */
   def s23StreamCompactedIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s23_")
     val dir = s"$base/table"; val ckpt = s"$base/ckpt"
-    val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    drain(Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val ch = b.select(col("user_id"),
-          expr("ts div 1000").as("tsu"), col("event_id"),
-          when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
-            .as(VersionedTable.OpCol),
-          col("event_type").as("last_type"), col("value").as("last_value"))
-        VersionedTable.commitDelta(dir, ch, batchId)
+        VersionedTable.commitDelta(dir, changeRows(b), batchId)
         if (batchId % 4L == 3L)
           VersionedTable.compactUpTo(spark, dir, batchId,
             Seq("user_id"), Seq("tsu", "event_id"))
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     VersionedTable
       .readAsOf(spark, dir, Seq("user_id"), Seq("tsu", "event_id"),
         Long.MaxValue)
@@ -1498,17 +1389,12 @@ object StreamingQueries {
     * The oracle's 6× corpus blowup (every version × every row) is
     * oracle-only. */
   def s24StreamChangeFeed(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s24_")
     val drops = s"$base/drops"; val state = s"$base/state"
     val feed = s"$base/feed"; val ckpt = s"$base/ckpt"
     new java.io.File(drops).mkdirs()
     val op = KeyedMerge.OpCol
-    val ch0 = Tables.events(spark, sfDir).select(col("user_id"),
-      expr("ts div 1000").as("tsu"), col("event_id"),
-      when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
-        .as(op),
-      col("event_type").as("last_type"), col("value").as("last_value"))
+    val ch0 = changeRows(Tables.events(spark, sfDir))
     val mm = ch0.agg(min(col("tsu")), max(col("tsu")), count(lit(1))).head()
     val lo = mm.getLong(0); val hi = mm.getLong(1) + 1
     val span = math.max(1L, (hi - lo + 5) / 6)
@@ -1551,7 +1437,7 @@ object StreamingQueries {
       dst.toFile.setLastModified(1600000000000L + k * 60000L)
       ()
     }
-    val q = spark.readStream.schema(schema)
+    drain(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(drops)
       .writeStream
@@ -1588,9 +1474,7 @@ object StreamingQueries {
         }
         ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     spark.read.parquet(feed).drop("delta")
       .orderBy(col("version"), col("user_id"))
   }

@@ -16,14 +16,11 @@ object Tables {
   // the registered queries read the same handful of tables hundreds of
   // times per session, so the (session, path) → DataFrame plan is memoized
   // (a DataFrame is just a logical plan — reuse within a session is free).
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val frames = new SessionMemo[DataFrame]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // evict plans from stopped sessions so the map stays bounded
-    cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    cache.getOrElseUpdate((spark, path), spark.read.parquet(path))
+    frames(spark, path)(spark.read.parquet(path))
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")

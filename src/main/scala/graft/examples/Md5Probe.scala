@@ -62,7 +62,8 @@ object Md5Probe {
       x -> CAST(conv(substring(md5(CAST(concat(CAST(k AS STRING), '|', x) AS BINARY)), 1, 15), 16, 10) AS BIGINT))))"""
     time("d15-shingles-only") { noop(psql(tCte)) }
     time("d15-sig-interpreted") { noop(psql(
-      s"SELECT doc_id, p, ${sigInterp("sha")} AS siga, ${sigInterp("shb")} AS sigb FROM ($tCte) WHERE size(sha) > 0 AND size(shb) > 0")) }
+      s"SELECT doc_id, p, ${sigInterp("sha")} AS siga, ${sigInterp("shb")} AS sigb " +
+        s"FROM ($tCte) WHERE size(sha) > 0 AND size(shb) > 0")) }
     time("d15-jaccard-only") { noop(psql(
       s"""SELECT CAST(least(9, floor((CAST(size(array_intersect(sha, shb)) AS DOUBLE)
         / size(array_distinct(concat(sha, shb)))) * 10)) AS BIGINT) AS bucket

@@ -13,7 +13,9 @@ import graft.SparkSpec
   * directory case regressed silently once — the leaf-name glob matched
   * nothing inside the directory and the stream drained ZERO rows while
   * still "succeeding" (caught only because the sf1 bench timing collapsed
-  * to 0.2 s). This spec pins both layouts to the batch row count. */
+  * to 0.2 s). This spec pins both layouts to the batch row count, and
+  * that each drain shape (memory sink, file sink, complete-mode
+  * overwrite, engine run) returns only after its query has stopped. */
 class EventsFileStreamSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private val srcDir = "/root/testdata/sf0.001"
@@ -44,6 +46,15 @@ class EventsFileStreamSpec extends AnyFunSuite with Matchers with SparkSpec {
       try all.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.deleteIfExists(_))
       finally all.close()
+    }
+  }
+
+  test("memory, file-sink, complete-overwrite and engine drains leave no streaming query active") {
+    for (name <- Seq("s6_stream_window_counts", "s7_stream_dedup",
+        "s9_stream_sessions", "s1_stream_count_by_type")) withClue(s"$name: ") {
+      val out = StreamingQueries.queries(name)(spark, srcDir)
+      spark.streams.active shouldBe empty
+      out.count() should be > 0L
     }
   }
 }

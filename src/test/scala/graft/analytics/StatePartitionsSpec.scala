@@ -10,7 +10,8 @@ import graft.SparkSpec
   * shuffle-partition count of a stateful query is frozen into the
   * state-store layout at the first checkpoint, so it is sized from source
   * bytes up front — floor 4, clamped to the session default — and the
-  * session conf must be restored after the drain (including on failure). */
+  * session conf must be restored after the drain (including on failure),
+  * through the same `withConf` swap every session-conf change uses. */
 class StatePartitionsSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   test("sizing rule: floor 4, ~1 partition per mbPerPartition, clamped to session default") {
@@ -55,5 +56,27 @@ class StatePartitionsSpec extends AnyFunSuite with Matchers with SparkSpec {
       }
     }
     spark.conf.get(key) shouldBe prev
+  }
+
+  test("withConf restores a set key and unsets an unset key, also when the body throws") {
+    val key = "graft.test.withConf"
+    def run(fail: Boolean): Unit = {
+      def body(): Unit = {
+        spark.conf.get(key) shouldBe "new"
+        if (fail) throw new IllegalStateException("boom")
+      }
+      if (fail) intercept[IllegalStateException](StreamingQueries.withConf(spark, key -> "new")(body()))
+      else StreamingQueries.withConf(spark, key -> "new")(body())
+    }
+    for (fail <- Seq(false, true)) withClue(s"body throws = $fail: ") {
+      spark.conf.getOption(key) shouldBe None
+      run(fail)
+      spark.conf.getOption(key) shouldBe None
+      StreamingQueries.withConf(spark, key -> "old") {
+        run(fail)
+        spark.conf.get(key) shouldBe "old"
+      }
+      spark.conf.getOption(key) shouldBe None
+    }
   }
 }

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.analytics.StreamingQueries
 import Sessionize.UserEvent
 
 /** Event-time + stateful streaming coverage: session_window with watermark
@@ -140,31 +141,26 @@ class SessionizeSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("transformWithState keeps typed per-user ValueState across micro-batches (RocksDB store)") {
     val s = spark; import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[UserEvent]
-    val q = Sessionize.runningCounts(input.toDS())
-      .writeStream.format("memory").queryName("running_counts")
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      input.addData(UserEvent(3, "view", ts(0)), UserEvent(3, "click", ts(1)),
-        UserEvent(4, "view", ts(2)))
-      q.processAllAvailable()
-      input.addData(UserEvent(3, "purchase", ts(5)))
-      q.processAllAvailable()
-      val latest = spark.sql(
-        "SELECT max(nEvents) FROM running_counts WHERE userId = 3").head().getLong(0)
-      latest shouldBe 3L // ValueState carried across micro-batches
-      spark.sql("SELECT max(nEvents) FROM running_counts WHERE userId = 4")
-        .head().getLong(0) shouldBe 1L
-    } finally {
-      q.stop()
-      spark.sql("DROP TABLE IF EXISTS running_counts")
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    StreamingQueries.withConf(spark, StreamingQueries.RocksDbStateStore) {
+      val input = MemoryStream[UserEvent]
+      val q = Sessionize.runningCounts(input.toDS())
+        .writeStream.format("memory").queryName("running_counts")
+        .outputMode("update")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        input.addData(UserEvent(3, "view", ts(0)), UserEvent(3, "click", ts(1)),
+          UserEvent(4, "view", ts(2)))
+        q.processAllAvailable()
+        input.addData(UserEvent(3, "purchase", ts(5)))
+        q.processAllAvailable()
+        val latest = spark.sql(
+          "SELECT max(nEvents) FROM running_counts WHERE userId = 3").head().getLong(0)
+        latest shouldBe 3L // ValueState carried across micro-batches
+        spark.sql("SELECT max(nEvents) FROM running_counts WHERE userId = 4")
+          .head().getLong(0) shouldBe 1L
+      } finally {
+        q.stop()
+        spark.sql("DROP TABLE IF EXISTS running_counts")
       }
     }
   }
